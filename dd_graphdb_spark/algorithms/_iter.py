@@ -19,16 +19,23 @@ brackets the loop with explicit bookkeeping:
 A localCheckpoint'ed RDD cannot be recomputed after unpersist (its
 lineage is truncated), which is why the result must be re-checkpointed
 *before* the loop's blocks are freed.
+
+Physical choices that belong to one loop's plans — a wider AQE initial
+partition count, AQE off for a keyed checkpoint, a narrow width for
+tiny state — are scoped by planning that work in a ``cloned_session``
+and ``rebind``-ing frames in and out; the caller's session conf is
+never changed, so concurrent callers of one shared session (``api.py``)
+never plan with another call's settings. Pinned-block bookkeeping stays
+per SparkContext, which every clone shares.
 """
 
 from __future__ import annotations
 
-import os
+import dataclasses
 import threading
 from collections.abc import Callable
-from contextlib import contextmanager as _contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 #: serializes the snapshot→loop→unpersist bracket: the diff-based
 #: bookkeeping sees SESSION-global pinned-RDD state, so a second loop
@@ -37,15 +44,88 @@ from pyspark.sql import DataFrame
 #: and a localCheckpoint cannot be recomputed after unpersist
 _PIN_LOCK = threading.RLock()
 
+_INITIAL_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
-def _env_int(name: str, default: int) -> int:
-    """int env knob with a crash-proof parse: a malformed value falls
-    back to the default instead of turning every gated call into a
-    ValueError (ADVICE r15)."""
+#: AQE initial shuffle-partition count for loops whose per-round
+#: aggregates are EDGE-sized (synchronized LPA's neighbor-label
+#: frequencies, FastSV's per-edge min-reductions, k-core's degree
+#: recount). AQE can coalesce shuffle partitions but never split them,
+#: so the initial count bounds per-task aggregation hash tables: at sf10
+#: the LPA label-frequency aggregate packed ~13 M groups into each of 32
+#: reduce partitions and spilled (1272 s; 191 s at 256). A GLOBAL raise
+#: is wrong the other way — small-state loops (BFS frontiers) pay
+#: per-round fan-out overhead for nothing (same-host sf10 A/B: 7.9 s at
+#: 32 → 33.5 s at 256) — so only those loops plan in a ``wide_graph``
+#: clone. The raise is unconditional within them: a controlled A/B at
+#: sf0.1 (min-of-3 ×2, one session) read always-raise ≤ a Catalyst
+#: size-estimate gate on every gated query — kcore [0.79–0.82] vs
+#: [0.93–1.07] s, LPA [0.97–0.99] vs [1.07–1.24] s, SSSP flat — because
+#: AQE's runtime coalescing already absorbs the 256 initial partitions
+#: on small inputs, while the gate's probe costs an optimizer pass.
+WIDE_PARTITIONS = 256
+
+#: shuffle width for work whose whole state is tiny (an incremental
+#: view's maintained graph after a handful of delta batches): its cost
+#: is task-scheduling fan-out, not data — partition count dominates
+#: small-state rounds (BFS small-state loop: 7.9 s at 32 partitions →
+#: 33.5 s at 256). Callers gate this on a MEASURED state size.
+NARROW_PARTITIONS = 8
+
+NARROW_CONF = {
+    "spark.sql.shuffle.partitions": str(NARROW_PARTITIONS),
+    _INITIAL_PARTITIONS: str(NARROW_PARTITIONS),
+}
+
+
+def cloned_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` with ``conf`` applied — the engine's one way
+    to scope a conf change to its own plans.
+
+    ``api.py`` serves one shared session to concurrent threads, so
+    setting and restoring the caller's conf around engine work would let
+    every query planned meanwhile on another thread pick up the change
+    (and a lost restore would keep it). The clone carries the caller's
+    runtime settings at clone time (``newSession()`` would drop them —
+    e.g. the ``nanosAsLong`` read_events needs at execution time) and
+    nothing set on it reaches the caller, so there is nothing to restore,
+    also when the scoped work raises. Frames move between the two with
+    ``rebind``. Spark Connect has no JVM session to clone: the work
+    then runs in the caller's session, unscoped."""
     try:
-        return int(os.environ.get(name, default))
-    except (TypeError, ValueError):
-        return default
+        jclone = spark._jsparkSession.cloneSession()
+    except AttributeError:
+        return spark
+    for k, v in conf.items():
+        jclone.conf().set(k, v)
+    return SparkSession(spark.sparkContext, jclone)
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a frame of ``spark``: later planning
+    (and execution) of it uses ``spark``'s conf. Checkpointed frames
+    keep their recorded partitioning and ordering. No-op for a frame
+    already in ``spark`` and on Spark Connect."""
+    if df.sparkSession is spark or not hasattr(df, "_jdf"):
+        return df
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, spark)
+
+
+def rebind_graph(g, spark: SparkSession):
+    """PropertyGraph ``g`` with both frames rebound into ``spark``."""
+    return dataclasses.replace(
+        g, vertices=rebind(g.vertices, spark), edges=rebind(g.edges, spark)
+    )
+
+
+def wide_graph(g):
+    """``g`` rebound into a clone of its session planning with
+    ``WIDE_PARTITIONS`` initial AQE partitions, for loops with EDGE-sized
+    per-round aggregates. ``run_loop`` rebinds the loop's result back."""
+    wide = {_INITIAL_PARTITIONS: str(WIDE_PARTITIONS)}
+    return rebind_graph(g, cloned_session(g.vertices.sparkSession, wide))
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
@@ -63,93 +143,6 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     return n if 0 <= n < (1 << 50) else None
 
 
-@_contextmanager
-def wide_shuffle(spark, size_hint: DataFrame | None = None):
-    """Scoped raise of AQE's initial shuffle-partition count, for loops
-    whose per-round aggregates are EDGE-sized (synchronized LPA's
-    neighbor-label frequencies, FastSV's per-edge min-reductions).
-
-    The raise is UNCONDITIONAL within the scoped loops (r16
-    adjudication of the r15 size gate, VERDICT item 4): a controlled
-    env-toggled A/B at sf0.1 (one session, alternating gated vs
-    always-raise, min-of-3 ×2 rounds each) read always-raise ≤ gated on
-    all three gated queries — kcore [0.79–0.82] vs [0.93–1.07] s, LPA
-    [0.97–0.99] vs [1.07–1.24] s, SSSP flat — because AQE's runtime
-    coalescing already absorbs the 256 initial partitions on small
-    inputs, while the gate's Catalyst size-estimate probe costs a full
-    optimizer pass of the edge frame per loop call. The r15 gate was
-    therefore a measured net loss at the scale it was meant to help,
-    and the sf10 win of the raise itself (below) never needed it:
-    REVERTED. ``size_hint`` is accepted for call-site compatibility and
-    ignored.
-
-    AQE can coalesce shuffle partitions but never split them, so the
-    initial count bounds per-task aggregation hash tables: at sf10 the
-    LPA label-frequency aggregate packed ~13 M groups into each of 32
-    reduce partitions and spilled (1272 s; 191 s at 256). A GLOBAL
-    raise is wrong the other way — small-state loops (BFS frontiers)
-    pay per-round fan-out overhead for nothing (same-host sf10 A/B:
-    7.9 s at 32 → 33.5 s at 256) — so the raise is scoped to the loops
-    that need it and restored in a finally.
-
-    Concurrency limitation (accurate statement): _PIN_LOCK serializes
-    only OTHER run_loop fixpoint loops — an ordinary GQL/DataFrame
-    query planned on ANOTHER thread during this window silently picks
-    up the 256-partition raise (results stay correct; small-state work
-    pays measured fan-out overhead, see the A/B above). Single-threaded
-    drivers — the suites, bench, the shell — are unaffected. A
-    multi-threaded server should give loops their own
-    ``SparkSession.newSession()`` so the conf raise scopes to that
-    session's plans only."""
-    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, os.environ.get("SPARK_GRAFT_WIDE_PARTITIONS", "256"))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-@_contextmanager
-def narrow_shuffle(spark, n: int = 8):
-    """Scoped LOWERING of the shuffle-partition count, the mirror image
-    of ``wide_shuffle``: for fixpoint loops whose whole state is tiny
-    (an incremental view's maintained graph right after a handful of
-    delta batches), per-round cost is pure task-scheduling fan-out —
-    the wide_shuffle docstring's own A/B (BFS small-state loop: 7.9 s
-    at 32 partitions → 33.5 s at 256) shows partition count dominates
-    small-state rounds. Callers gate this on a MEASURED row count
-    (parquet metadata counts are ~free), so a view whose state has
-    grown past the threshold keeps the full-width loop — the knob is
-    size-aware, never a global cap."""
-    keys = (
-        "spark.sql.shuffle.partitions",
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-    )
-    prev = {}
-    for k in keys:
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-    for k in keys:
-        spark.conf.set(k, str(n))
-    try:
-        yield
-    finally:
-        for k in keys:
-            if prev[k] is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, prev[k])
-
-
 def _ckpt(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint with SERIALIZED memory+disk blocks.
 
@@ -159,13 +152,32 @@ def _ckpt(df: DataFrame) -> DataFrame:
     block manager re-unrolls them into object arrays
     (maybeCacheDiskValuesInMemory), which with 32 concurrent tasks
     unrolling ~550 MiB partitions OOM'd a 64 g heap in the sf10 SCC
-    loop. Serialized blocks fit, their unroll accounting is chunked,
-    and per-round scans decode Tungsten rows cheaply. Every fixpoint
-    checkpoint (loop state AND the run_loop result bracket) goes
-    through here; copartitioned() applies the same level itself."""
+    loop (and the ~400 M-row sf10 edge checkpoint plus 32 concurrent
+    build sorts OOM'd it in copartitioned). Serialized blocks fit, their
+    unroll accounting is chunked, and per-round scans decode Tungsten
+    rows cheaply. Every eager checkpoint of loop state, keyed layouts
+    and the run_loop result bracket goes through here."""
     from pyspark.storagelevel import StorageLevel
 
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+
+
+def keyed_ckpt(df: DataFrame) -> DataFrame:
+    """``_ckpt`` planned with AQE off, returned in ``df``'s session.
+
+    ``localCheckpoint`` records the physical plan's
+    outputPartitioning/outputOrdering into the resulting LogicalRDD —
+    but under AQE the physical plan is an AdaptiveSparkPlanExec whose
+    partitioning is unknown at checkpoint time, so the checkpoint comes
+    out with UnknownPartitioning and every downstream join re-shuffles
+    it. Planned with AQE off, a ``repartition(n, keys)`` frame's
+    checkpoint carries hashpartitioning(keys, n) plus any sort order the
+    plan ends with, and later joins on ``keys`` (AQE back on) read its
+    blocks without an exchange or sort. AQE is switched off only in a
+    ``cloned_session``, so the caller stays adaptive throughout."""
+    caller = df.sparkSession
+    aqe_off = cloned_session(caller, {"spark.sql.adaptive.enabled": "false"})
+    return rebind(_ckpt(rebind(df, aqe_off)), caller)
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -204,23 +216,14 @@ def copartitioned(df: DataFrame, *keys: str, dedup_cols: list | None = None) -> 
     ``keys`` so every per-round equi-join on those keys reads the stored
     layout instead of re-exchanging (and re-sorting) the frame each round.
 
-    Why this needs care: ``localCheckpoint`` records the physical plan's
-    outputPartitioning/outputOrdering into the resulting LogicalRDD — but
-    under AQE the physical plan is an AdaptiveSparkPlanExec whose
-    partitioning is unknown at checkpoint time, so the checkpoint comes
-    out with UnknownPartitioning and every downstream join re-shuffles
-    the FULL frame. For a fixpoint loop that joins a static edge list
-    every round this is the dominant cost at scale: the sf10 supplier
-    co-location graph (~400 M directed edges) was shuffle-written 10×
-    inside the SSSP loop (measured 1372 s; VERDICT r8 "What's wrong #1").
-    Planning the checkpoint with AQE off makes the LogicalRDD carry
-    hash(keys, spark.sql.shuffle.partitions) + ascending order, so the
-    consuming sort-merge joins (AQE back on) exchange and sort only the
-    frontier side — the edge side is a bare block scan.
-
-    The AQE toggle is scoped to the one checkpoint-building query and
-    restored in a finally; a concurrent query planned inside the window
-    would merely plan non-adaptively (correct, possibly slower once).
+    The checkpoint is a ``keyed_ckpt`` (planned with AQE off): under
+    AQE it would come out with UnknownPartitioning, and for a fixpoint
+    loop that joins a static edge list every round that is the dominant
+    cost at scale — the sf10 supplier co-location graph (~400 M directed
+    edges) was shuffle-written 10× inside the SSSP loop (measured
+    1372 s; VERDICT r8 "What's wrong #1"). With the keyed layout the
+    consuming sort-merge joins exchange and sort only the frontier
+    side — the edge side is a bare block scan.
 
     ``dedup_cols``: deduplicate rows on these columns INSIDE the build —
     AFTER the repartition, so the whole build is ONE exchange. A caller
@@ -240,28 +243,11 @@ def copartitioned(df: DataFrame, *keys: str, dedup_cols: list | None = None) -> 
             f"{keys} (dedup after repartition is only correct when equal "
             "dedup keys co-locate)"
         )
-    from pyspark.storagelevel import StorageLevel
-
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        out = df.repartition(n, *keys)
-        if dedup_cols is not None:
-            out = out.dropDuplicates(dedup_cols)
-        return (
-            out.sortWithinPartitions(*keys)
-            # SERIALIZED memory+disk (PySpark's MEMORY_AND_DISK constant
-            # is the serialized variant): the JVM default stores
-            # deserialized object rows, ~3-4x the footprint — at sf10
-            # the ~400 M-row edge checkpoint plus 32 concurrent build
-            # sorts OOM'd a 64 g heap; serialized blocks fit, and the
-            # per-round scans decode Tungsten rows cheaply
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    out = df.repartition(n, *keys)
+    if dedup_cols is not None:
+        out = out.dropDuplicates(dedup_cols)
+    return keyed_ckpt(out.sortWithinPartitions(*keys))
 
 
 def _persistent_ids(spark) -> set[int]:
@@ -396,7 +382,10 @@ class RoundPins:
 
 def run_loop(impl: Callable[..., DataFrame], g, *args, **kwargs) -> DataFrame:
     """Run a fixpoint loop and free every block it pinned except the
-    result's. ``g`` is the PropertyGraph (first arg of every impl)."""
+    result's. ``g`` is the PropertyGraph (first arg of every impl). A
+    loop that plans in a ``cloned_session`` (e.g. over ``wide_graph(g)``)
+    gets its result re-checkpointed in, and returned to, ``g``'s own
+    session."""
     spark = g.vertices.sparkSession
     with _PIN_LOCK:
         try:
@@ -407,7 +396,7 @@ def run_loop(impl: Callable[..., DataFrame], g, *args, **kwargs) -> DataFrame:
         try:
             result = impl(g, *args, **kwargs)
             mid = _persistent_ids(spark)
-            final = _ckpt(result)
+            final = _ckpt(rebind(result, spark))
             final_ids = _persistent_ids(spark) - mid
             return final
         finally:

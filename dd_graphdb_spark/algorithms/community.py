@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dd_graphdb_spark.graph import PropertyGraph
-from dd_graphdb_spark.algorithms._iter import RoundPins, copartitioned, run_loop, wide_shuffle
+from dd_graphdb_spark.algorithms._iter import RoundPins, copartitioned, run_loop, wide_graph
 
 
 def _lpa_loop(
@@ -89,12 +89,11 @@ def label_propagation(
 ) -> DataFrame:
     """(id, community) after ``max_iterations`` synchronized LPA rounds.
 
-    Runs under wide_shuffle: round 1's neighbor-label frequency frame
+    Runs over ``wide_graph(g)``: round 1's neighbor-label frequency frame
     is EDGE-sized and its hash aggregate needs the wider reduce fan-out
     (same-host sf10 A/B: 122 s at 32 initial partitions → 90 s at 256;
     the pre-serialized-checkpoint form spilled to 1272 s)."""
     def impl(g, *a, **kw):
-        with wide_shuffle(g.vertices.sparkSession, size_hint=g.edges):
-            return _lpa_loop(g, *a, **kw)
+        return _lpa_loop(wide_graph(g), *a, **kw)
 
     return run_loop(impl, g, max_iterations, ckpt_every)

@@ -43,7 +43,7 @@ from dd_graphdb_spark.graph import PropertyGraph
 
 from dd_graphdb_spark.algorithms._iter import RoundPins, copartitioned
 from dd_graphdb_spark.algorithms._iter import materialize as _materialize
-from dd_graphdb_spark.algorithms._iter import run_loop, wide_shuffle
+from dd_graphdb_spark.algorithms._iter import run_loop, wide_graph
 
 
 def _connected_components_loop(g: PropertyGraph, max_iterations: int = 50) -> DataFrame:
@@ -323,7 +323,7 @@ def connected_components(
 ) -> DataFrame:
     """Public entry; releases loop-intermediate checkpoint blocks.
 
-    Runs under wide_shuffle: FastSV's per-round neighbor-min reduction
+    Runs over ``wide_graph(g)``: FastSV's per-round neighbor-min reduction
     is an EDGE-sized aggregate (same-host sf10 A/B on the derived-graph
     gate query: 77 s at 32 initial partitions → 47 s at 256). SCC does
     NOT take the raise — its peel rounds are many small stages and the
@@ -336,8 +336,7 @@ def connected_components(
         return _connected_components_single_partition(g)
 
     def impl(g, *a, **kw):
-        with wide_shuffle(g.vertices.sparkSession, size_hint=g.edges):
-            return _connected_components_loop(g, *a, **kw)
+        return _connected_components_loop(wide_graph(g), *a, **kw)
 
     return run_loop(impl, g, max_iterations)
 

@@ -21,17 +21,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dd_graphdb_spark.graph import PropertyGraph
-from dd_graphdb_spark.algorithms._iter import RoundPins, run_loop, wide_shuffle
+from dd_graphdb_spark.algorithms._iter import RoundPins, run_loop, wide_graph
 
 
 def _k_core_loop(g: PropertyGraph, k: int, max_iterations: int = 50) -> DataFrame:
     """Vertices of the k-core (id). Undirected degrees.
 
-    Runs under wide_shuffle: the per-round degree recount is an
+    Runs over ``wide_graph(g)``: the per-round degree recount is an
     EDGE-sized aggregate (same-host sf10 A/B: 164 s at 32 initial
     partitions → 119 s at 256)."""
-    with wide_shuffle(g.vertices.sparkSession, size_hint=g.edges):
-        return _k_core_body(g, k, max_iterations)
+    return _k_core_body(wide_graph(g), k, max_iterations)
 
 
 def _k_core_body(g: PropertyGraph, k: int, max_iterations: int = 50) -> DataFrame:

@@ -17,6 +17,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dd_graphdb_spark.algorithms._iter import keyed_ckpt, plan_size_bytes
+
+#: input bytes per keyed-checkpoint partition. Checkpoint width is
+#: SIZE-ADAPTIVE: Catalyst's free size estimate over the input, one
+#: partition per PAIR_PART_BYTES (deliberately small because each input
+#: row fans out up to d-fold in the cold join), clamped to [session
+#: shuffle width, n_parts]. A fixed 256 floor measured ~1.1× slower
+#: across the 9 salted-path gates at sf0.1 (256 near-empty tasks per
+#: stage × 5 stages of pure scheduling overhead) while large inputs
+#: still grow toward n_parts; an unusable estimate keeps the
+#: conservative n_parts.
+PAIR_PART_BYTES = 4 << 20
+
 
 def salted_self_pairs(
     df: DataFrame,
@@ -53,8 +66,8 @@ def salted_self_pairs(
     hot/cold routing is a filter, not a separate size-probe aggregation
     plus two broadcast anti-joins (the r15 shape referenced its input
     five times, which is why every caller needed its own checkpoint).
-    The annotated frame is eagerly localCheckpoint'ed with AQE disabled
-    for that one job: under AQE the checkpointed plan reports
+    The annotated frame is a ``keyed_ckpt`` — planned with AQE off in a
+    cloned session: under AQE the checkpointed plan reports
     UnknownPartitioning, while with AQE off the checkpoint preserves
     hashpartitioning(key_cols, n_parts) AND the window's sort order —
     so the cold self-join below needs NO exchange and NO sort on either
@@ -62,13 +75,13 @@ def salted_self_pairs(
 
     Contract notes: this operator is EAGER (the checkpoint runs a Spark
     job at DataFrame-construction time) and does not accept streaming
-    inputs. localCheckpoint blocks are MEMORY_AND_DISK and freed when
-    the returned frame is GC'd; on a multi-executor cluster they die
-    with their executor (no recompute path) — for long jobs on
+    inputs. localCheckpoint blocks are serialized MEMORY_AND_DISK and
+    freed when the returned frame is GC'd; on a multi-executor cluster
+    they die with their executor (no recompute path) — for long jobs on
     preemptible nodes prefer ``df.checkpoint()`` semantics upstream (see
-    README "localCheckpoint durability"). The brief AQE toggle is
-    session-scoped: concurrent driver threads planning queries during
-    the (short, eager) checkpoint job would also plan without AQE.
+    README "localCheckpoint durability"). AQE is off only in the clone:
+    the caller's session stays adaptive, so concurrent driver threads
+    planning on it meanwhile are unaffected.
     """
     base = df.select(F.col(id_col).alias("_m"), *key_cols, *payload_cols, *carry_cols)
     spark = df.sparkSession
@@ -85,35 +98,17 @@ def salted_self_pairs(
     # d·d/n_salts; cold: ≤ salt_threshold² per key).
     n_parts = max(n_salts * 16, spark.sparkContext.defaultParallelism * 4)
 
-    # Checkpoint width is SIZE-ADAPTIVE (the wide_shuffle pattern):
-    # Catalyst's free size estimate over the input, one partition per
-    # SPARK_GRAFT_PAIR_PART_BYTES (4 MB default — deliberately small
-    # because each input row fans out up to d-fold in the cold join),
-    # clamped to [session shuffle width, n_parts]. A fixed 256 floor
-    # measured ~1.1× slower across the 9 salted-path gates at sf0.1
-    # (256 near-empty tasks per stage × 5 stages of pure scheduling
-    # overhead) while large inputs still grow toward n_parts; an
-    # unusable estimate keeps the conservative n_parts.
-    from dd_graphdb_spark.algorithms._iter import _env_int, plan_size_bytes
-
     est = plan_size_bytes(base)
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if est is not None:
-        part_bytes = max(1, _env_int("SPARK_GRAFT_PAIR_PART_BYTES", 4 << 20))
-        n_ckpt = min(n_parts, max(shuffle_n, est // part_bytes + 1))
+        n_ckpt = min(n_parts, max(shuffle_n, est // PAIR_PART_BYTES + 1))
     else:
         n_ckpt = n_parts
 
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        ann = (
-            base.repartition(n_ckpt, *key_cols)
-            .withColumn("_sz", F.count("*").over(Window.partitionBy(*key_cols)))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    ann = keyed_ckpt(
+        base.repartition(n_ckpt, *key_cols)
+        .withColumn("_sz", F.count("*").over(Window.partitionBy(*key_cols)))
+    )
 
     if annotated_out is not None:
         annotated_out.append(ann)

@@ -19,6 +19,16 @@ def get_spark(
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    """The engine's session: AQE on, ``shuffle_partitions`` (default 32)
+    both as the shuffle width and as AQE's initial partition count.
+
+    Engine work that needs other physical settings — a wider initial
+    count for edge-sized loop aggregates, AQE off for a keyed
+    checkpoint, a narrow width for tiny state, a stream's state width
+    and store — plans in a clone of the caller's session
+    (``algorithms._iter.cloned_session``) instead of setting and
+    restoring this session's conf, so concurrent callers sharing it
+    (``api.py``) keep planning with these values."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = (
@@ -33,13 +43,10 @@ def get_spark(
         # (same-host sf10 A/B: BFS 7.9 s at 32 → 33.5 s at 256, SCC
         # 283 s → 487 s) while only EDGE-sized-aggregate loops gain
         # (LPA 122 → 90 s, k-core 164 → 119 s, FastSV CC 77 → 47 s).
-        # The raise is therefore SCOPED to those loops via
-        # algorithms._iter.wide_shuffle; the session default stays at
-        # the shuffle-partition count. Env knob kept for A/B studies.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(shuffle)),
-        )
+        # The raise is therefore SCOPED to those loops
+        # (algorithms._iter.wide_graph); the session default stays at
+        # the shuffle-partition count.
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(shuffle))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local_df (localrel.py) depends on Arrow createDataFrame(pandas)

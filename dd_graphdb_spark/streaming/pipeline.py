@@ -29,9 +29,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dd_graphdb_spark.algorithms._iter import cloned_session, rebind
 from dd_graphdb_spark.graph import read_events
-
-_SHUFFLE_TUNE_LOCK = threading.Lock()
 
 #: staged-source cache (r15, advisor): the multi-file restage rewrites
 #: the whole events table — paying that full-table write on EVERY
@@ -42,13 +41,19 @@ _SHUFFLE_TUNE_LOCK = threading.Lock()
 _STAGE_CACHE: dict[tuple, str] = {}
 _STAGE_LOCK = threading.Lock()
 
-#: source bytes of the most recent events_stream build, per session
-#: (id(spark) key): run_to_memory sizes the stream's STATE partitioning
-#: from it — see the state-width note there. Single-writer per session
-#: (the harness builds a stream then immediately runs it); a
-#: multi-threaded server should pass run_to_memory(state_partitions=...)
-#: explicitly instead of relying on this channel.
-_SOURCE_BYTES: dict[int, int] = {}
+#: source bytes per state partition in ``run_to_memory``. A stateful
+#: query creates one state store per shuffle partition per stateful
+#: operator per micro-batch — a stream-stream join opens 4 RocksDB
+#: instances per partition, and batch commit cost is per-STORE fixed
+#: work regardless of rows (measured: the watermark-eviction batch of
+#: stream_live_left_outer_join runs 3.4 s with ZERO input rows at 32
+#: partitions; the whole gate is 7.0–7.3 s at 32 vs 2.3 s at 8 vs 2.0 s
+#: at 4, identical results). 256 KB of compressed source is a few MB of
+#: state.
+STREAM_STATE_BYTES = 256 << 10
+
+_PROV = "spark.sql.streaming.stateStore.providerClass"
+_CLOG = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
 
 def _purge_staged_dirs() -> None:
@@ -95,14 +100,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         if src_dir is None or not os.path.isdir(src_dir):
             src_dir = _stage_events_dir(spark, src, raw_schema)
             _STAGE_CACHE[key] = src_dir
-    # record the source size (already stat'd for the identity key) so
-    # run_to_memory can size state partitioning from the data; the key
-    # is (path, mtime, size) for a single file, (path, (name, mtime,
-    # size), ...) for a directory
-    if len(key) == 3 and isinstance(key[2], int):
-        _SOURCE_BYTES[id(spark)] = key[2]
-    else:
-        _SOURCE_BYTES[id(spark)] = sum(p[-1] for p in key[1:] if isinstance(p, tuple))
     stream = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)  # source-side rate limit
@@ -194,119 +191,103 @@ def kafka_stream(
     )
 
 
+def _file_source_bytes(df: DataFrame) -> int:
+    """Bytes of the data files under the file-source paths at the
+    leaves of ``df``'s plan (each distinct path once — a self-join of
+    one source reads one table; staged symlinks stat through to the
+    source). 0 when the plan has no local file source."""
+    import os
+
+    paths = set()
+    try:
+        leaves = df._jdf.logicalPlan().collectLeaves().iterator()
+    except AttributeError:  # Spark Connect
+        return 0
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "StreamingRelation":
+            path = leaf.dataSource().options().get("path")
+            if path.isDefined():
+                paths.add(path.get())
+    total = 0
+    for p in paths:
+        for root, dirs, files in os.walk(p):
+            # the file source skips hidden (_SUCCESS, .crc) entries too
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            total += sum(
+                os.path.getsize(os.path.join(root, f))
+                for f in files
+                if not f.startswith(("_", "."))
+            )
+    return total
+
+
 def run_to_memory(
     df: DataFrame,
     name: str | None = None,
     output_mode: str = "complete",
     timeout_s: float = 120.0,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Run a streaming frame to completion (availableNow) into an
     in-memory table and return it as a batch DataFrame. Test/verification
     harness — production sinks are parquet/kafka/foreachBatch.
 
-    ``state_partitions``: explicit state-store partition count for this
-    run (overrides the size-derived width below); None = derive."""
+    The stream runs in a ``cloned_session`` holding its state width and
+    state-store settings, so the caller's conf never changes (concurrent
+    callers of one shared session plan unaffected). The memory table
+    lives in the clone and comes back rebound into the caller's session.
+
+    State width: one state store per shuffle partition. An untuned
+    session (default 200) would open 200 Python workers + stores for a
+    single micro-batch, so it gets the default parallelism; a caller who
+    set the conf keeps it as the cap. Below the cap the width is one
+    partition per ``STREAM_STATE_BYTES`` of the stream's own file-source
+    bytes — at sf1+ the derived width already hits the cap, so this only
+    trims the tiny-state end."""
     name = name or f"mem_{uuid.uuid4().hex[:8]}"
     spark = df.sparkSession
-    # Stateful operators create one state store per shuffle partition at
-    # query start; under an untuned session (default 200) that is 200
-    # Python workers + stores for a single micro-batch. Right-size ONLY
-    # untuned sessions (a caller who set the conf keeps their value
-    # untouched — no mutation at all on tuned sessions, e.g. get_spark's
-    # 32), and hold a lock across the mutate→run→restore bracket so
-    # overlapping harness calls on one session can't plan against each
-    # other's temporary value. Production sinks size this explicitly.
-    with _SHUFFLE_TUNE_LOCK:
-        # read INSIDE the lock: reading before it could observe another
-        # caller's temporary in-bracket value (e.g. the right-sized "8"),
-        # classify the session as tuned, and skip the right-sizing
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        untuned = prev == "200"
-        width = (
-            spark.sparkContext.defaultParallelism if untuned else int(prev)
-        )
-        # STATE-WIDTH sizing (r16, guide §2.2 applied to state stores):
-        # a stateful query creates one state store per shuffle partition
-        # per stateful operator per micro-batch — a stream-stream join
-        # opens 4 RocksDB instances per partition, and batch commit cost
-        # is per-STORE fixed work regardless of rows (measured: the
-        # watermark-eviction batch of stream_live_left_outer_join runs
-        # 3.4 s with ZERO input rows at 32 partitions; the whole gate is
-        # 7.0–7.3 s at 32 vs 2.3 s at 8 vs 2.0 s at 4, identical
-        # results). Size the width from the MEASURED source bytes
-        # (events_stream records them): one state partition per
-        # SPARK_GRAFT_STREAM_STATE_BYTES of source (default 256 KB of
-        # compressed source ≈ a few MB of state), never RAISED above
-        # the session width — at sf1+ the derived width already hits
-        # the cap, and on a production session the cap is the operator's
-        # own shuffle setting, so this only trims the tiny-state end.
-        # 0 disables; ``state_partitions`` pins explicitly.
-        if state_partitions is not None:
-            width = max(1, int(state_partitions))
-        else:
-            src_bytes = _SOURCE_BYTES.get(id(spark))
-            if src_bytes:
-                from dd_graphdb_spark.algorithms._iter import _env_int
-
-                per_part = _env_int("SPARK_GRAFT_STREAM_STATE_BYTES", 256 << 10)
-                if per_part > 0:
-                    width = min(width, max(1, src_bytes // per_part + 1))
-        retune = str(width) != prev
-        if retune:
-            spark.conf.set("spark.sql.shuffle.partitions", str(width))
-        # State store: default to RocksDB. The default
-        # HDFSBackedStateStoreProvider keeps every store's full state
-        # on-heap — at 100 TB the state of a stream-stream join outgrows
-        # executor heaps long before the data outgrows the cluster;
-        # RocksDB holds state off-heap/on-disk with incremental
-        # checkpoints. Measured on the join-state-heaviest gate query
-        # (stream_live_left_outer_join, sf0.1, same session, min of 3):
-        # 45.1 s on-heap → 12.3 s RocksDB. A caller who set the provider
-        # explicitly (≠ the HDFS default) keeps their choice.
-        _PROV = "spark.sql.streaming.stateStore.providerClass"
-        prev_prov = spark.conf.get(
-            _PROV,
-            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-        )
-        default_prov = prev_prov.rsplit(".", 1)[-1] == "HDFSBackedStateStoreProvider"
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    width = spark.sparkContext.defaultParallelism if prev == "200" else int(prev)
+    src_bytes = _file_source_bytes(df)
+    if src_bytes:
+        width = min(width, src_bytes // STREAM_STATE_BYTES + 1)
+    conf = {"spark.sql.shuffle.partitions": str(width)}
+    # State store: default to RocksDB. The default
+    # HDFSBackedStateStoreProvider keeps every store's full state
+    # on-heap — at 100 TB the state of a stream-stream join outgrows
+    # executor heaps long before the data outgrows the cluster; RocksDB
+    # holds state off-heap/on-disk with incremental checkpoints.
+    # Measured on the join-state-heaviest gate query
+    # (stream_live_left_outer_join, sf0.1, same session, min of 3):
+    # 45.1 s on-heap → 12.3 s RocksDB. A caller who set the provider
+    # explicitly (≠ the HDFS default) keeps their choice.
+    prov = spark.conf.get(_PROV, "HDFSBackedStateStoreProvider")
+    if prov.rsplit(".", 1)[-1] == "HDFSBackedStateStoreProvider":
+        conf[_PROV] = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         # Changelog checkpointing rides along with the RocksDB default
         # (and only then — a caller-chosen provider keeps its own
         # settings): per-commit state checkpoints upload the batch's
         # changelog instead of full SST snapshots. That is both the
         # documented at-scale posture (incremental checkpoints bound
         # commit I/O by delta size, not state size) and a measured local
-        # win — stream_live_left_outer_join min-of-3 A/B this round:
-        # 10.02 s snapshots → 7.06 s changelog.
-        _CLOG = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        prev_clog = spark.conf.get(_CLOG, None)
-        if default_prov:
-            spark.conf.set(
-                _PROV,
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            )
-            if prev_clog is None:
-                spark.conf.set(_CLOG, "true")
-        try:
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-                .start()
-            )
-            q.awaitTermination(timeout_s)
-            if q.isActive:
-                q.stop()
-        finally:
-            if retune:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-            if default_prov:
-                spark.conf.set(_PROV, prev_prov)
-                if prev_clog is None:
-                    spark.conf.unset(_CLOG)
-    return df.sparkSession.table(name)
+        # win — stream_live_left_outer_join min-of-3 A/B: 10.02 s
+        # snapshots → 7.06 s changelog.
+        if spark.conf.get(_CLOG, None) is None:
+            conf[_CLOG] = "true"
+    scoped = cloned_session(spark, conf)
+    q = (
+        rebind(df, scoped)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+        .start()
+    )
+    q.awaitTermination(timeout_s)
+    if q.isActive:
+        q.stop()
+    return rebind(scoped.table(name), spark)
 
 
 def incremental_view_pipeline(

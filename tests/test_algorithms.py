@@ -425,30 +425,99 @@ def test_kcore_bounds_pinned_blocks_per_round(spark):
     assert len(_persistent_ids(spark) - before) <= 1
 
 
-def test_wide_shuffle_scopes_and_restores(spark):
-    """wide_shuffle raises AQE's initial partition count only inside the
-    with-block and restores the prior value even on an exception."""
-    import pytest as _pytest
+def test_scoped_work_never_changes_the_callers_conf(spark, sf_dir, tmp_path, monkeypatch):
+    """Engine work with its own physical settings (AQE-off keyed
+    checkpoints, wide fixpoint loops, a narrow connectivity refresh, a
+    stream's state width and store) plans in a cloned session: a thread
+    polling the caller's conf the whole time — as any concurrent request
+    on ``api.py``'s shared session would plan with it — sees only the
+    values from before the run, also while a scoped call raises. The
+    scoped values still reach the scoped work."""
+    import threading
+    import time
 
-    from dd_graphdb_spark.algorithms._iter import wide_shuffle
+    from pyspark.sql import functions as F
 
-    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    from dd_graphdb_spark.algorithms import components, structure
+    from dd_graphdb_spark.algorithms._iter import (
+        NARROW_PARTITIONS,
+        WIDE_PARTITIONS,
+        copartitioned,
+    )
+    from dd_graphdb_spark.operators._skew import salted_self_pairs
+    from dd_graphdb_spark.streaming import events_stream, global_agg, run_to_memory
+    from dd_graphdb_spark.views.incremental import IncrementalConnectivity
+
+    initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    watched = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.shuffle.partitions",
+        initial,
+        "spark.sql.streaming.stateStore.providerClass",
+    )
+
+    def conf_now():
+        return tuple(spark.conf.get(k, None) for k in watched)
+
+    before = conf_now()
+    samples, stop = [], threading.Event()
+
+    def poll():
+        while not stop.is_set():
+            samples.append(conf_now())
+            time.sleep(0.001)
+
+    seen = []  # (work, setting its scoped plans saw)
+
+    def spy(mod, name, key):
+        real = getattr(mod, name)
+
+        def wrapped(g, *a, **kw):
+            seen.append((name, g.vertices.sparkSession.conf.get(key)))
+            return real(g, *a, **kw)
+
+        monkeypatch.setattr(mod, name, wrapped)
+
+    spy(components, "_connected_components_loop", initial)
+    spy(structure, "_k_core_body", initial)
+    # the refresh's fixpoint entry (A.connected_components is bound at import)
+    spy(components, "connected_components", "spark.sql.shuffle.partitions")
+
+    v = spark.createDataFrame([(i,) for i in range(12)], "id long")
+    e = spark.createDataFrame(
+        [(i, (i + 1) % 6, "x") for i in range(6)] + [(6, 7, "x"), (8, 9, "x")],
+        "src long, dst long, label string",
+    )
+    g = PropertyGraph(v, e)
+    members = spark.range(60).select(F.col("id").alias("m"), (F.col("id") % 3).alias("k"))
+    conn = IncrementalConnectivity(spark, str(tmp_path / "conn"))
+    conn.apply_edge_deltas(spark.createDataFrame([(1, 2), (3, 4)], "src long, dst long"))
+
+    poller = threading.Thread(target=poll, daemon=True)
+    poller.start()
     try:
-        before = spark.conf.get(key)
-    except Exception:
-        before = None
-    with wide_shuffle(spark):
-        assert spark.conf.get(key) == "256"
-    try:
-        after = spark.conf.get(key)
-    except Exception:
-        after = None
-    assert after == before
-    with _pytest.raises(RuntimeError, match="boom"):
-        with wide_shuffle(spark):
-            raise RuntimeError("boom")
-    try:
-        after = spark.conf.get(key)
-    except Exception:
-        after = None
-    assert after == before
+        assert salted_self_pairs(members, "m", ["k"], salt_threshold=10).count() == 3 * 190
+        assert copartitioned(e.select("src", "dst"), "src").count() == 8
+        assert A.connected_components(g).select("component").distinct().count() == 5
+        assert A.k_core(g, 2).count() == 6
+        assert tuple(conn.result().collect()[0]) == (2, 4)
+        stream = global_agg(events_stream(spark, sf_dir), key_cols=("event_type",))
+        assert run_to_memory(stream, output_mode="complete").count() > 0
+        # a scoped call whose work fails inside the AQE-off clone
+        bad = members.withColumn(
+            "k", F.when(F.col("m") > 5, F.raise_error("boom")).otherwise(F.col("k"))
+        )
+        with pytest.raises(Exception, match="boom"):
+            salted_self_pairs(bad, "m", ["k"])
+    finally:
+        stop.set()
+        poller.join(timeout=10)
+    assert not poller.is_alive()
+    assert len(samples) > 50
+    assert set(samples) == {before}
+    assert conf_now() == before
+    assert seen == [
+        ("_connected_components_loop", str(WIDE_PARTITIONS)),
+        ("_k_core_body", str(WIDE_PARTITIONS)),
+        ("connected_components", str(NARROW_PARTITIONS)),
+    ]

@@ -282,3 +282,28 @@ def test_events_stream_restage_is_cached(spark, tmp_path):
     assert stamps == {
         f: os.path.getmtime(os.path.join(staged, f)) for f in os.listdir(staged)
     }
+
+
+def test_run_to_memory_sizes_state_from_its_own_stream(spark, sf_dir, monkeypatch):
+    """State width comes from the bytes of the stream being run: a
+    larger events stream built in between (another caller on the same
+    session) does not widen it. sf0.001 events are one state partition
+    of STREAM_STATE_BYTES."""
+    import os
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *a, **kw):
+        started.append(real_start(self, *a, **kw))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    small = global_agg(events_stream(spark, sf_dir), key_cols=("event_type",))
+    events_stream(spark, os.path.join(os.path.dirname(sf_dir), "sf0.1"))
+    run_to_memory(small, output_mode="complete")
+    (q,) = started
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 1
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"

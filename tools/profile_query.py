@@ -31,8 +31,6 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_UI", "true")
     from pyspark.sql import SparkSession
 
-    from dd_graphdb_spark.suites import all_queries
-
     # same configs as bench, but with the UI (REST API) on
     import dd_graphdb_spark.session as S
 
@@ -57,11 +55,19 @@ def main() -> None:
         )
         return b.getOrCreate()
 
-    # route suite-internal sessions through the UI-enabled factory, and
-    # restored at the end of main (ADVICE r15: was saved but never restored)
+    # route suite-internal sessions through the UI-enabled factory while
+    # profiling; restored even when a query raises
     orig = S.get_spark
     S.get_spark = get_spark_ui
-    spark = get_spark_ui()
+    try:
+        _profile(get_spark_ui(), sf_dir, names)
+    finally:
+        S.get_spark = orig
+
+
+def _profile(spark, sf_dir: str, names: list[str]) -> None:
+    from dd_graphdb_spark.suites import all_queries
+
     qs, _ = all_queries(hygiene=False)
     app_id = spark.sparkContext.applicationId
     port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
@@ -103,7 +109,6 @@ def main() -> None:
                 f"tasks={j['numTasks']:>5} {desc}"
             )
     spark.stop()
-    S.get_spark = orig
 
 
 if __name__ == "__main__":
