@@ -373,6 +373,10 @@ def semantic_dedup(
     """
     from dd_graphdb_spark.operators._skew import salted_self_pairs
 
+    if n_centroids < 1:
+        # an empty quantizer leaves every probe list empty, and the
+        # cell == cell0 filter below would then drop every row
+        raise ValueError(f"n_centroids must be >= 1, got {n_centroids}")
     cents = train_centroids(emb, n_centroids, train_iters, id_col, vec_col)
 
     # probe list exactly as ivf_topk: n_probe nearest centroids, sim

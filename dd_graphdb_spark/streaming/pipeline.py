@@ -320,8 +320,9 @@ def incremental_view_pipeline(
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch hands the batch to an isolated session clone; the
-        # temp view only exists there, so the catalog must build against
-        # that session for this batch.
+        # temp view only exists there, so the catalog builds this batch's
+        # refresh in that session — passed in, never swapped onto the
+        # shared catalog, where a concurrent reader would plan in it.
         batch_df.createOrReplaceTempView(events_view_name)
         names = affected_views(batch_df) if affected_views else catalog.list_views()
         incr = getattr(catalog, "incremental", {})
@@ -356,12 +357,7 @@ def incremental_view_pipeline(
                 catalog.apply_deltas(n, deltas)
             else:
                 catalog.mark_dirty(n)
-        main_session = catalog.spark
-        catalog.spark = batch_df.sparkSession
-        try:
-            catalog.refresh_all()
-        finally:
-            catalog.spark = main_session
+        catalog.refresh_all(spark=batch_df.sparkSession)
 
     q = (
         stream.writeStream.foreachBatch(on_batch)

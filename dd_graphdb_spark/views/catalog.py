@@ -37,6 +37,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -184,6 +185,10 @@ class ViewCatalog:
         self.builders: dict[str, Callable[[SparkSession], DataFrame]] = {}
         self.state: dict[str, dict] = {}  # name -> {last_refresh, dirty, cached}
         self.incremental: dict[str, object] = {}  # name -> delta-state object
+        # name -> schema of the frame refresh() last wrote; read() hands
+        # it to the reader so a view scan infers no footer schema (a
+        # reloaded catalog has none and infers, once per read)
+        self._schemas: dict[str, StructType] = {}
         self.gql_engine = None  # attach_gql_engine() enables gql views
         self._load()
 
@@ -239,6 +244,7 @@ class ViewCatalog:
         if builder is not None:
             self.builders[defn.name] = builder
         self.state[defn.name] = {"last_refresh": None, "dirty": True, "cached": False}
+        self._schemas.pop(defn.name, None)
         with open(self._defn_path(defn.name), "w") as f:
             json.dump(defn.to_json(), f)
 
@@ -264,6 +270,7 @@ class ViewCatalog:
         self.builders.pop(name, None)
         self.incremental.pop(name, None)
         self.state.pop(name, None)
+        self._schemas.pop(name, None)
         p = self._defn_path(name)
         if os.path.exists(p):
             os.remove(p)
@@ -339,13 +346,13 @@ class ViewCatalog:
                 self.mark_dirty(n, seen)
 
     # ---- refresh ----------------------------------------------------------
-    def _build(self, name: str) -> DataFrame:
+    def _build(self, name: str, spark: SparkSession) -> DataFrame:
         d = self.defs[name]
         # dependencies must be readable as mv_<dep> temp views
         for dep in d.dependencies:
-            self.read(dep).createOrReplaceTempView(f"mv_{dep}")
+            self.read(dep, spark).createOrReplaceTempView(f"mv_{dep}")
         if name in self.builders:
-            return self.builders[name](self.spark)
+            return self.builders[name](spark)
         if d.gql is not None:
             if self.gql_engine is None:
                 raise ValueError(
@@ -361,28 +368,36 @@ class ViewCatalog:
                 "register(defn, builder=...) (or register_incremental) "
                 "before refreshing"
             )
-        return self.spark.sql(d.sql)
+        return spark.sql(d.sql)
 
-    def refresh(self, name: str, force: bool = False) -> bool:
+    def refresh(
+        self, name: str, force: bool = False, spark: SparkSession | None = None
+    ) -> bool:
         """Refresh one view if its policy says so (or force). Returns
-        whether a refresh ran."""
+        whether a refresh ran. ``spark``: the session to build in (a
+        stream's micro-batch session, where its temp views live);
+        default the catalog's own — never swapped, since concurrent
+        readers plan in it."""
         st = self.state[name]
         d = self.defs[name]
         if not force and not d.refresh_policy.needs_refresh(st["last_refresh"], st["dirty"]):
             return False
-        df = self._build(name)
+        df = self._build(name, spark or self.spark)
         df.write.mode("overwrite").parquet(self._data_path(name))
+        self._schemas[name] = df.schema
         st["last_refresh"] = time.time()
         st["dirty"] = False
         return True
 
-    def refresh_all(self, force: bool = False) -> list[str]:
+    def refresh_all(
+        self, force: bool = False, spark: SparkSession | None = None
+    ) -> list[str]:
         """Topo-ordered refresh of every view needing it
         (process_pending_changes, incremental_engine.rs:272-310)."""
         refreshed = []
         for name in self.topo_order():
             try:
-                ran = self.refresh(name, force=force)
+                ran = self.refresh(name, force=force, spark=spark)
             except ValueError as ex:
                 # a reloaded builder-backed view with no re-attached
                 # builder must not abort the whole topo pass — its stale
@@ -398,13 +413,15 @@ class ViewCatalog:
         return refreshed
 
     # ---- reads ------------------------------------------------------------
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, spark: SparkSession | None = None) -> DataFrame:
         if name not in self.defs:
             raise KeyError(name)
         p = self._data_path(name)
         if not os.path.exists(p):
-            self.refresh(name, force=True)
-        df = self.spark.read.parquet(p)
+            self.refresh(name, force=True, spark=spark)
+        reader = (spark or self.spark).read
+        schema = self._schemas.get(name)
+        df = (reader if schema is None else reader.schema(schema)).parquet(p)
         if self.state[name]["cached"]:
             df = df.cache()
         return df

@@ -226,8 +226,8 @@ def test_agg_state_sums_past_decimal18(spark, tmp_path):
 def test_versioned_table_reads_old_precision_state(spark, tmp_path):
     """State persisted under an older declared schema (decimal(18,6))
     must read cleanly after the declaration widens to decimal(38,6) —
-    the read casts the parquet footer types instead of forcing the
-    declared schema onto the file (ADVICE r6)."""
+    the declared-schema parquet reader widens the stored decimal and
+    NULL-fills a column the file lacks (ADVICE r6)."""
     from dd_graphdb_spark.views.incremental import _VersionedTable
 
     path = str(tmp_path / "mig")

@@ -240,6 +240,15 @@ def test_semantic_dedup_cells_bound_the_pairs(spark):
     assert out == {0: True, 1: True, 2: False, 3: False}
 
 
+def test_semantic_dedup_rejects_empty_quantizer(spark):
+    """An empty quantizer would leave every probe list empty and drop
+    every row; it is rejected at entry instead."""
+    emb = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n_centroids"):
+            S.semantic_dedup(emb, n_centroids=n)
+
+
 def test_duplicate_spans_cross_document_only(spark):
     """Exact-substring spans: d1/d2 share an 8-token span; d3 repeats
     its own span twice (intra-doc — NOT a duplicate); d4 is shorter

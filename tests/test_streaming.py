@@ -105,6 +105,47 @@ def test_incremental_view_pipeline(spark, sf_dir, tmp_path):
     assert total == read_events(spark, sf_dir).count()
 
 
+def test_pipeline_never_swaps_the_catalog_session(spark, sf_dir, tmp_path):
+    """Each micro-batch refreshes in the batch's own session, passed
+    through refresh_all: a thread polling the shared catalog's session
+    while the pipeline runs — as a concurrent ``api.py`` read would plan
+    in it — sees only the main session."""
+    import threading
+    import time
+
+    from dd_graphdb_spark.streaming import incremental_view_pipeline
+    from dd_graphdb_spark.views import ViewCatalog, ViewDefinition
+
+    catalog = ViewCatalog(spark, str(tmp_path / "views"))
+    catalog.register(
+        ViewDefinition(
+            name="by_type",
+            view_type="aggregation",
+            sql="SELECT event_type, COUNT(*) AS n FROM stream_events GROUP BY event_type",
+        )
+    )
+    catalog.register(
+        ViewDefinition(name="total", view_type="aggregation", sql="SELECT SUM(n) AS total FROM mv_by_type")
+    )
+    samples, stop = [], threading.Event()
+
+    def poll():
+        while not stop.is_set():
+            samples.append(catalog.spark is spark)
+            time.sleep(0.001)
+
+    poller = threading.Thread(target=poll, daemon=True)
+    poller.start()
+    try:
+        incremental_view_pipeline(events_stream(spark, sf_dir), catalog)
+    finally:
+        stop.set()
+        poller.join(timeout=10)
+    assert len(samples) > 50
+    assert set(samples) == {True}
+    assert catalog.read("total").collect()[0]["total"] == read_events(spark, sf_dir).count()
+
+
 def test_count_window_stream_string_key(spark, tmp_path):
     """Streaming count windows with a STRING key: the output schema must
     carry the key's real dtype (it was hardcoded long), and multi-chunk

@@ -334,7 +334,18 @@ def _model_cc(verts, edges):
     return len({find(v) for v in parent}), len(parent)
 
 
-def test_incremental_connectivity_delta_bounded_refresh(spark, tmp_path):
+@pytest.fixture(params=["one_task", "splice"])
+def refresh_path(request, monkeypatch):
+    """Runs a connectivity test over both refresh paths. Every test
+    state is tiny and takes the one-task recompute; the splice side
+    shuts the size gate so the state-vs-snapshot diff and splice run."""
+    from dd_graphdb_spark.views.incremental import IncrementalConnectivity
+
+    if request.param == "splice":
+        monkeypatch.setattr(IncrementalConnectivity, "NARROW_BYTES", -1)
+
+
+def test_incremental_connectivity_delta_bounded_refresh(spark, tmp_path, refresh_path):
     from pyspark.sql import functions as F
 
     from dd_graphdb_spark.algorithms.components import connected_components
@@ -435,7 +446,7 @@ def test_single_partition_cc_matches_distributed(spark):
     assert single == dist
 
 
-def test_connectivity_refresh_survives_lost_snapshot(spark, tmp_path):
+def test_connectivity_refresh_survives_lost_snapshot(spark, tmp_path, refresh_path):
     import json
     import os
 
@@ -462,7 +473,7 @@ def test_connectivity_refresh_survives_lost_snapshot(spark, tmp_path):
     assert (r[0], r[1]) == (1, 3)  # full-recompute fallback, correct
 
 
-def test_connectivity_refresh_many_batches_and_vertex_only(spark, tmp_path):
+def test_connectivity_refresh_many_batches_and_vertex_only(spark, tmp_path, refresh_path):
     from dd_graphdb_spark.views.incremental import IncrementalConnectivity
 
     # 4+ batches between refreshes pushes state versions past
@@ -491,3 +502,40 @@ def test_connectivity_refresh_many_batches_and_vertex_only(spark, tmp_path):
     assert tuple(st2.result().collect()[0]) == (2, 2)
     st2.apply_vertex_deltas(spark.createDataFrame([(3,)], "id long"))
     assert tuple(st2.result().collect()[0]) == (3, 3)
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_small_state_maintenance_launches_few_jobs(spark, tmp_path):
+    """Scheduler job counts of the write→view path on a tiny state: a
+    changed 4-vertex connectivity state refreshes with the one-task
+    union-find (the diff/splice launched 40 jobs), and state and view
+    reads launch no schema-inference job."""
+    from dd_graphdb_spark.views.incremental import IncrementalConnectivity
+
+    st = IncrementalConnectivity(spark, str(tmp_path / "ic"))
+    st.apply_vertex_deltas(spark.createDataFrame([(i,) for i in range(1, 5)], "id long"))
+    st.apply_edge_deltas(spark.createDataFrame([(1, 2)], "src long, dst long"))
+    st._refresh_labels()
+    st.apply_edge_deltas(spark.createDataFrame([(3, 4)], "src long, dst long"))
+    j0 = _jobs(spark)
+    labels = st._refresh_labels()
+    assert _jobs(spark) - j0 <= 2
+    assert {r["id"]: r["component"] for r in labels.collect()} == {1: 1, 2: 1, 3: 3, 4: 3}
+
+    j0 = _jobs(spark)
+    state = st._edges.read()
+    assert _jobs(spark) - j0 == 0
+    assert sorted(tuple(r) for r in state.collect()) == [(1, 2), (3, 4)]
+
+    cat = ViewCatalog(spark, str(tmp_path / "views"))
+    cat.register(ViewDefinition(name="v", view_type="sql", sql="SELECT 7L AS x, 'a' AS y"))
+    cat.refresh("v", force=True)
+    j0 = _jobs(spark)
+    view = cat.read("v")
+    assert _jobs(spark) - j0 == 0
+    assert [tuple(r) for r in view.collect()] == [(7, "a")]
+    # a reloaded catalog has no recorded schema: it infers and reads the same
+    assert [tuple(r) for r in ViewCatalog(spark, cat.path).read("v").collect()] == [(7, "a")]
